@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Load pipeline (SURVEY §2.A A12-A13, A20): source → normalize →
@@ -64,21 +64,28 @@ object Load {
         entities = out.tables.entities; claims = out.tables.claims
     }
 
-    entities
-      .withColumn("tb", col("id.tb"))
+    val partitioned = entities.withColumn("tb", col("id.tb"))
+    partitioned
       .write.mode(SaveMode.Overwrite).partitionBy("tb")
       .parquet(s"$outDir/entities")
     claims
       .write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/claims")
     normalized.unpersist()
-    open(spark, outDir)
+    // the written schemas are in hand: no footer-inference job per table
+    open(spark.read.schema(partitioned.schema),
+      spark.read.schema(claims.schema), outDir)
   }
 
-  /** Open a sink directory written by [[run]]. */
-  def open(spark: SparkSession, outDir: String): WikiTables = WikiTables(
-    entities = spark.read.parquet(s"$outDir/entities").drop("tb"),
-    claims = spark.read.parquet(s"$outDir/claims"))
+  /** Open a sink directory written by [[run]], inferring its schemas
+    * from the parquet footers. */
+  def open(spark: SparkSession, outDir: String): WikiTables =
+    open(spark.read, spark.read, outDir)
+
+  private def open(entities: DataFrameReader, claims: DataFrameReader,
+                   outDir: String): WikiTables = WikiTables(
+    entities = entities.parquet(s"$outDir/entities").drop("tb"),
+    claims = claims.parquet(s"$outDir/claims"))
 
   /** One logical table (Entity / Property / Lexeme) — directory-pruned
     * scan thanks to the partitioned layout. */

@@ -5,10 +5,9 @@ import org.apache.spark.sql.types._
 /** Schemas for the Wikidata pipeline (SURVEY.md §1).
   *
   * Two layers:
-  *   1. the RAW dump schema — an explicit StructType for
-  *      `spark.read.schema(...).json` so production never pays schema
-  *      inference over a >1 TB dump, and nested-schema pruning can
-  *      push column selection into the scan;
+  *   1. the RAW dump schema — an explicit StructType for the
+  *      per-line `from_json`, so production never pays schema
+  *      inference over a >1 TB dump;
   *   2. the MODEL schema — the four-table record-linked layout
   *      (`Entity`/`Property`/`Lexeme` + `Claims`) with the
   *      serde-shaped claim-value union, so every documented query path
@@ -68,10 +67,14 @@ object Schemas {
   val rawWrapped: StructType = StructType(Seq(
     StructField("entities", MapType(StringType, rawEntity))))
 
+  /** Receives the text of a line that does not parse. */
+  val corruptRecord = "_corrupt_record"
+
   /** Superset line schema: a bare entity's fields plus the wrapper's
     * `entities` key, so ONE schema parses both line forms in a single
     * pass (the transform coalesces: wrapped beats bare). */
-  val rawLine: StructType = StructType(rawWrapped.fields ++ rawEntity.fields)
+  val rawLine: StructType = StructType(rawWrapped.fields ++ rawEntity.fields :+
+    StructField(corruptRecord, StringType))
 
   // ---------------------------------------------------------- model //
 

@@ -187,9 +187,10 @@ object Graph {
       else symDegSnap
     try {
       // degenerate 0-iteration call: the result is r⁰ itself — the
-      // constant 1/n over the node set (preserved old behavior)
+      // constant 1/n over the node set, from the snapshot (the finally
+      // unpersists `symDeg`)
       if (iters <= 0 && tol == 0)
-        return symDeg.select(col("src")).distinct()
+        return symDegSnap.select(col("src")).distinct()
           .select(col("src").as("node"),
             (round(lit(1.0 / n) * 1e6) / 1e6).as("rank"))
       // r⁰ = 1/n is the same CONSTANT on every node, so iteration 1

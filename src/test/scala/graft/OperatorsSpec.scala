@@ -1225,6 +1225,23 @@ class OperatorsSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("converge"), ex.getMessage)
   }
 
+  test("pagerank convergence: distributed loop (tinyGate = 0) equals the driver-local loop") {
+    val s = spark; import s.implicits._
+    val edges = Seq(("a", "b"), ("a", "c"), ("a", "d"), ("e", "f"))
+      .toDF("a", "b")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(x => x.getString(0) -> x.getDouble(1)).toMap
+    // the distributed convergence mode measures iteration 1's step
+    // against the 1/n literal, later steps against the pinned vector;
+    // both must stop where the local loop stops, with its ranks
+    val local = ranks(Graph.pageRankConverged(edges, 200, 1e-4))
+    val dist = ranks(Graph.pageRankConverged(edges, 200, 1e-4, tinyGate = 0))
+    assert(dist === local)
+    // the degenerate 0-iteration call is r⁰ = 1/n on every node
+    val r0 = ranks(Graph.pageRank(edges, 0, tinyGate = 0))
+    assert(r0 === local.keySet.map(_ -> math.round(1e6 / 6) / 1e6).toMap)
+  }
+
   test("repeated spans: hand-computed duplicated-window counts") {
     val s = spark; import s.implicits._
     // docs 1 and 2 share the 4-token span "a b c d" at different

@@ -142,6 +142,76 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), p)
   }
 
+  /** A small synthetic dump in the real dump's shape (bare entity
+    * lines in a top-level array, trailing commas). */
+  lazy val ingestDump: String = {
+    val d = java.nio.file.Files.createTempDirectory("plan-audit-dump").toString
+    graft.tools.EtlBench.writeDump(s"$d/dump.json", 200)
+    s"$d/dump.json"
+  }
+
+  test("wikidata source: each line is parsed once, with no cleanup pass") {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, JsonToStructs, RegExpReplace}
+    val p = graft.ingest.WikidataSource.read(spark, ingestDump)
+      .queryExecution.optimizedPlan
+    val exprs = p.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    assert(!exprs.exists(_.isInstanceOf[RegExpReplace]), p)
+    // one parse, over the raw text line: a filter on the parsed struct
+    // pushed beneath the parse Project would show up here as a second
+    val parses = exprs.collect { case j: JsonToStructs => j }
+    assert(parses.size === 1, p)
+    assert(parses.head.child match {
+      case a: AttributeReference => a.name == "value"
+      case _ => false
+    }, p)
+  }
+
+  test("Load.run: two write jobs; the sink reopens with the schemas inference gives") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val out = java.nio.file.Files.createTempDirectory("plan-audit-load").toString
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        groups.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    val t = try {
+      sc.setJobGroup("load-run", "Load.run")
+      val t = graft.ingest.Load.run(spark, ingestDump, out)
+      // the bus delivers events in order: once the marker job's start
+      // arrives, every job Load.run started has been counted
+      sc.setJobGroup("marker", "marker")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(20L)
+      t
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.contains("marker"), "listener bus did not deliver the marker job")
+    val jobs = groups.toArray.count(_ == "load-run")
+    assert(jobs === 2, s"expected the entities and claims writes only: $groups")
+    def sameAsInferred(t: graft.ingest.Load.WikiTables, dir: String): Unit = {
+      val inferred = graft.ingest.Load.open(spark, dir)
+      assert(t.entities.schema === inferred.entities.schema)
+      assert(t.claims.schema === inferred.claims.schema)
+    }
+    sameAsInferred(t, out)
+    assert(t.entities.count() === 200L && t.claims.count() === 200L)
+    // a filter script reshapes the tables (UPDATE adds a column): the
+    // returned schemas follow what was written, not the normalize
+    val widened = s"$out-widened"
+    val w = graft.ingest.Load.run(spark, ingestDump, widened,
+      mode = graft.ingest.Load.BulkFilterScript(
+        """update Entity SET note="n" where label = "none";"""))
+    assert(w.entities.columns.contains("note"))
+    sameAsInferred(w, widened)
+  }
+
   test("contamination: probe shingles broadcast — corpus side never self-joins") {
     val d = graft.sources.Tables.load(spark, sf, "documents")
     val p = plan(graft.operators.Dedup.contamination(

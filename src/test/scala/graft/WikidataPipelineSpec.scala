@@ -83,6 +83,29 @@ class WikidataPipelineSpec extends AnyFunSuite {
     assert(tags === Seq("Property", "Claims"))
   }
 
+  test("A5/A7: a truncated line leaves no partial row beside its full copy") {
+    val s = spark; import s.implicits._
+    // Spark's parser keeps the fields read before an error: the line
+    // cut after `"labels":{"en":` still carries id Q8. Around it: the
+    // array envelope, a blank line, leading whitespace, trailing commas.
+    val q8 = """{"type":"item","id":"Q8","labels":{"en":{"language":"en","value":"eight"}},"claims":{"P1":[{"mainsnak":{"snaktype":"value","property":"P1","datavalue":{"value":"x","type":"string"},"datatype":"string"},"type":"statement","rank":"normal"}]}}"""
+    val lines = Seq(
+      "[",
+      """{"type":"item","id":"Q8","labels":{"en":""",
+      "",
+      "   " + q8 + ",",
+      """{"type":"item","id":"Q9","claims":{}},""",
+      "]")
+    val dir = tmp()
+    Files.writeString(JPaths.get(s"$dir/cut.json"), lines.mkString("\n"))
+    for (df <- Seq(WikidataSource.read(spark, s"$dir/cut.json"),
+        WikidataSource.entities(WikidataSource.fromLines(lines.toDF("value"))))) {
+      val rows = df.select(col("id"), size(col("claims")))
+        .collect().map(r => r.getString(0) -> r.get(1)).sortBy(_._1)
+      assert(rows.toSeq === Seq("Q8" -> 1, "Q9" -> 0))
+    }
+  }
+
   test("A8/A10: qualifier flattening matches golden per-entity counts") {
     val n = Transform.normalize(entityRaw, "en")
     val counts = n.select(col("id.id"), size(col("claims_arr")))
